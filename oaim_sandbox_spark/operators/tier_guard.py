@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
-from oaim_sandbox_spark.operators.retrieval import distance_expr
+from oaim_sandbox_spark.operators.retrieval import distance_expr, similarity_topk
 
 DEFAULT_FLOOR = 0.8
 
@@ -518,6 +518,17 @@ class TieredStore:
     (int64 words / 16-dim prefixes vs full float arrays) while the exact
     re-rank touches only fetch_mult*k candidate rows.
 
+    The plan follows the query count. A batch (`topk_batch`,
+    `topk_batch_df`) scores every query in ONE scan of the representation
+    through a broadcast pair join and a per-query rank window. A single
+    int8 query (`topk`) skips the pair join: the query vector is a plan
+    literal, stage 1 is `retrieval.similarity_topk` over the dequantized
+    representation (a TakeOrderedAndProject, no shuffle, no window), and
+    its k hits broadcast-join back to the store — two Spark jobs per
+    request. Both plans compute the same rounded distance with the same
+    (distance, id) tie-break, so they return the same rows in the same
+    order. Every `topk` ends in orderBy(distance, id).limit(k).
+
     Recall gating is OPT-IN at this layer (ADVICE r10): pass the operating
     point from a cached catalog verdict
     (`VectorStoreCatalog.assert_tier_usable(..., metric=...)`) so a tier
@@ -597,12 +608,30 @@ class TieredStore:
 
         self._rep = materialize_relation(rep, f"tier_{tier}")
 
+    def _check_reserved(self) -> None:
+        """Refuse a store whose columns collide with the top-k output.
+        neighbor_id is joined then dropped on the output path, so it is
+        reserved too — without this check a store carrying its own
+        neighbor_id column fails later with AMBIGUOUS_REFERENCE instead
+        of this rename hint (ADVICE r10). Every public entry point calls
+        it up front (ADVICE r12)."""
+        clash = {"query_id", "distance", "rank", "neighbor_id"} & set(self.store.columns)
+        if clash:
+            raise ValueError(
+                f"store columns {sorted(clash)} collide with topk output "
+                "columns (query_id/neighbor_id/distance/rank are reserved); "
+                "rename them before building the TieredStore"
+            )
+
     def topk_batch(self, queries: list[tuple[int, list[float]]], k: int = 4) -> DataFrame:
         """Exact-metric top-k for MANY query vectors through ONE stage-1
         scan over the compressed representation — the 100 TB serving shape
         (per-query scans would re-read the representation |queries| times;
-        every canonical candidate generator is already batched, so the
-        batch form is the natural one and `topk` is its 1-query wrapper).
+        every canonical candidate generator is already batched). The
+        re-rank tiers' `topk` is this call's 1-query wrapper; int8's `topk`
+        runs a literal-query plan instead and returns the same rows.
+        The query frame crosses to the JVM as Arrow batches, so no Python
+        worker runs on this path.
         `queries` is [(query_id, vector)] with unique int ids; returns
         (<store columns>, query_id, distance, rank) — store columns FIRST
         (the store is the join's left side) — ascending per query. The
@@ -614,7 +643,9 @@ class TieredStore:
         qrows = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
         if len({q for q, _ in qrows}) != len(qrows):
             raise ValueError("query ids must be unique")
-        qdf = spark.createDataFrame(qrows, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
+        from oaim_sandbox_spark.operators import ann as A
+
+        qdf = A._pairs_df(spark, qrows, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
         return self.topk_batch_df(qdf, k=k)
 
     def topk_batch_df(self, qdf: DataFrame, k: int = 4) -> DataFrame:
@@ -633,20 +664,7 @@ class TieredStore:
         path cannot drift."""
         from oaim_sandbox_spark.operators import ann as A
 
-        # neighbor_id is joined then dropped on the output path, so it is
-        # reserved too — without this check a store carrying its own
-        # neighbor_id column fails later with AMBIGUOUS_REFERENCE instead
-        # of this rename hint (ADVICE r10). The check lives HERE, not in
-        # topk_batch, because topk_batch_df became a public entry point
-        # (evaluate_testset_batched calls it directly) and both entry
-        # points must refuse up front (ADVICE r12).
-        clash = {"query_id", "distance", "rank", "neighbor_id"} & set(self.store.columns)
-        if clash:
-            raise ValueError(
-                f"store columns {sorted(clash)} collide with topk output "
-                "columns (query_id/neighbor_id/distance/rank are reserved); "
-                "rename them before building the TieredStore"
-            )
+        self._check_reserved()
         if self.tier == "int8":
             res = A.knn_join(A.dequantize_embeddings(self._rep), qdf, k=k,
                              metric=self.metric)
@@ -678,10 +696,21 @@ class TieredStore:
     def topk(self, query_vec: list[float], k: int = 4) -> DataFrame:
         """Exact-metric top-k through the tier funnel for ONE query vector.
         Returns the original store columns plus `distance` (round 6),
-        ordered ascending — the same output contract as
-        retrieval.similarity_topk, so serving callers can swap it in."""
-        return (
-            self.topk_batch([(0, query_vec)], k=k)
-            .drop("query_id", "rank")
-            .orderBy(F.col("distance").asc(), F.col(self.id_col).asc())
-        )
+        ordered ascending by (distance, id) and limited to k — the same
+        output contract as retrieval.similarity_topk, so serving callers
+        can swap it in. int8 runs the literal-query plan (see the class
+        docstring); the re-rank tiers wrap `topk_batch`."""
+        if self.tier == "int8":
+            from oaim_sandbox_spark.operators import ann as A
+
+            self._check_reserved()
+            hits = similarity_topk(
+                A.dequantize_embeddings(self._rep), query_vec, k=k,
+                metric=self.metric, id_col="vec_id",
+            ).select(F.col("vec_id").alias("neighbor_id"), "distance")
+            res = self.store.join(
+                F.broadcast(hits), F.col(self.id_col).cast("bigint") == F.col("neighbor_id")
+            ).drop("neighbor_id")
+        else:
+            res = self.topk_batch([(0, query_vec)], k=k).drop("query_id", "rank")
+        return res.orderBy(F.col("distance").asc(), F.col(self.id_col).asc()).limit(k)

@@ -308,9 +308,41 @@ def test_approx_vocab_overlap_matches_frozen_output(spark):
 
     root = Path(__file__).resolve().parents[1]
     old = json.loads((root / "tests/fixtures/r14_avocab_old_output.json").read_text())
-    for sf, sfd in (("sf0.001", "/root/testdata/sf0.001"),):
+    for sf, sfd in (("sf0.001", "/root/testdata/sf0.001"),
+                    ("sf0.01", "/root/testdata/sf0.01")):
         got = [list(r) for r in _approx_vocab_overlap_spark(spark, sfd).collect()]
         assert got == old[sf], (sf, got[:3], old[sf][:3])
+
+
+@pytest.mark.parametrize("fail_at", [1, 2])
+def test_approx_vocab_overlap_audit_drops_view_on_failure(spark, monkeypatch, fail_at):
+    """The audit path's materialized (source, g) view is dropped when
+    either of its consumers fails — the signature pass (1st reader) or
+    the exact matrix (2nd reader) — so an error never leaves a temp view
+    behind in the shared session."""
+    from oaim_sandbox_spark.queries_registry import approx_vocab_overlap
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    real_sql = spark.sql
+    readers = []
+
+    def failing_sql(query, *args, **kwargs):
+        if "avocab_sg_" in query:
+            readers.append(query)
+            if len(readers) == fail_at:
+                raise RuntimeError("injected failure")
+        return real_sql(query, *args, **kwargs)
+
+    approx_vocab_overlap(spark, "/root/testdata/sf0.001", audit=True)
+    before = temp_views()
+    monkeypatch.setattr(spark, "sql", failing_sql)
+    with pytest.raises(RuntimeError, match="injected"):
+        approx_vocab_overlap(spark, "/root/testdata/sf0.001", audit=True)
+    monkeypatch.undo()
+    assert len(readers) == fail_at
+    assert temp_views() == before
 
 
 def test_approx_vocab_overlap_sigs_multiset_equals_distinct(spark):

@@ -257,8 +257,19 @@ def test_int8_rep_materializes_quantized_columns_only(cat_store):
     ts = TieredStore(cat.read_store(name), "int8")
     assert set(ts._rep.columns) == {"vec_id", "qvec", "qscale"}
     qv = [float(x) for x in cat.read_store(name).filter("id = 7").first()["embedding"]]
-    hits = ts.topk(qv, k=3).collect()
+    top = ts.topk(qv, k=3)
+    hits = top.collect()
     assert len(hits) == 3 and hits[0]["id"] == 7  # self is nearest
+    # single-query plan: the query is a literal and stage 1 a
+    # TakeOrderedAndProject — no rank window, no Python-built query frame
+    qe = top._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan and "Window" not in plan, plan
+    leaves = qe.optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            assert "PythonRDD" not in leaf.rdd().toDebugString()
 
 
 def test_rerank_tier_serves_euclidean_exact_order(cat_store):

@@ -195,9 +195,12 @@ def test_probe_validates_metric_per_tier(spark):
 
 def test_topk_batch_equals_per_query_topk(spark):
     """topk_batch through one stage-1 scan returns, per query, exactly the
-    rows the single-query topk returns — for a re-rank tier AND int8, and
-    under a non-cosine metric."""
-    from oaim_sandbox_spark.operators.tier_guard import TieredStore
+    rows the single-query topk returns — for every servable tier under
+    COSINE, and for int8 (whose single query runs its own literal-query
+    plan) under all three metrics. The int8 single query runs in at most
+    two Spark jobs: the k-hit stage 1 feeding a broadcast, and the final
+    limit-terminated join."""
+    from oaim_sandbox_spark.operators.tier_guard import SERVABLE_TIERS, TieredStore
 
     store = _planted_store(spark, n_vec=300)
     qids = [3, 41, 77]
@@ -205,8 +208,10 @@ def test_topk_batch_equals_per_query_topk(spark):
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in store.filter(F.col("vec_id").isin(qids)).collect()
     }
-    for tier, metric in (("binary_hamming_rerank", "COSINE"),
-                         ("int8", "DOT_PRODUCT")):
+    cases = [(tier, "COSINE") for tier in SERVABLE_TIERS]
+    cases += [("int8", "DOT_PRODUCT"), ("int8", "EUCLIDEAN_DISTANCE")]
+    sc = spark.sparkContext
+    for tier, metric in cases:
         ts = TieredStore(store, tier, metric=metric, id_col="vec_id")
         batch = ts.topk_batch([(q, qvecs[q]) for q in qids], k=4).collect()
         got = {}
@@ -215,6 +220,15 @@ def test_topk_batch_equals_per_query_topk(spark):
         for q in qids:
             single = [(r["vec_id"], r["distance"]) for r in ts.topk(qvecs[q], k=4).collect()]
             assert got[q] == single, (tier, metric, q)
+        if tier == "int8":
+            group = f"int8_single_topk_{metric}"
+            sc.setJobGroup(group, group)
+            try:
+                ts.topk(qvecs[qids[0]], k=4).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert 1 <= len(jobs) <= 2, (metric, len(jobs))
     # duplicate query ids refuse up front
     ts = TieredStore(store, "int8", id_col="vec_id")
     with pytest.raises(ValueError, match="unique"):
